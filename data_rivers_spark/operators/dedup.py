@@ -569,9 +569,7 @@ def minhash_lsh_dedup(
     num_hashes: int = 32,
     bands: int | None = 8,
     shingle_n: int = 3,
-    verify: str = "shingle",
     bucket_cap: int = 1000,
-    materialize: bool = True,
     shingle_mode: str = "word",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify →
@@ -579,56 +577,36 @@ def minhash_lsh_dedup(
 
     ``bands=None`` derives the banding from (threshold, num_hashes) via
     lsh_plan — the S-curve planner picks the recall-constrained,
-    verify-cost-minimal split (r12).
+    verify-cost-minimal split.
 
-    verify='shingle' (default) checks candidates with the n-gram shingle
-    Jaccard that MinHash approximates — the internally-consistent choice;
-    'word' uses word-set jaccard (a looser, vocabulary-level notion).
-    ``shingle_mode='char'`` switches the whole pipeline (signatures AND
-    verification) to character n-grams — the tokenizer-free path for
-    CJK/mixed-script corpora (pair with a larger shingle_n, e.g. 5).
+    Candidates are verified with the n-gram shingle Jaccard that MinHash
+    approximates. ``shingle_mode='char'`` switches the whole pipeline
+    (signatures AND verification) to character n-grams — the
+    tokenizer-free path for CJK/mixed-script corpora (pair with a larger
+    shingle_n, e.g. 5).
 
-    ``materialize=True`` (default) eagerly localCheckpoints the duplicate-id
-    frame (and, on the shingle path, the shared shingle-set frame) BEFORE
-    building the final anti-join. Without it, Catalyst pushes the anti-join
-    through a Union input and re-plans the entire LSH pipeline once per Union
-    branch — DataFrame reuse is lineage reuse, not computation reuse, so the
-    corpus would be re-tokenized per consumer (round-2 plan audit measured
-    the tokenize subtree 6×). Checkpointing swaps the subtree for one cached
-    RDD; the cost is that calling this function triggers the candidate/verify
-    jobs immediately rather than at first action.
+    Calling this function runs the candidate/verify jobs immediately (the
+    duplicate-id frame is an eager barrier), not at first action.
 
     Note: transitively-linked clusters are collapsed greedily by min-id (a doc
     is dropped if it pairs above threshold with ANY lower id) — the standard
     single-pass approximation of connected components; use
     ``dedup_by_components`` for the exact closure."""
-    bands = _resolve_bands(threshold, num_hashes, bands)
-    if verify == "shingle":
-        verified = minhash_lsh_verified_pairs(
-            df,
-            text_col,
-            id_col,
-            threshold,
-            num_hashes,
-            bands,
-            shingle_n,
-            bucket_cap,
-            materialize=materialize,
-            shingle_mode=shingle_mode,
-        )
-    else:
-        cands = minhash_lsh_candidates(
-            df, text_col, id_col, num_hashes, bands, shingle_n, bucket_cap
-        )
-        verified = verify_pairs_jaccard(
-            df, cands, text_col, id_col, threshold, flavor=verify, shingle_n=shingle_n
-        )
+    verified = minhash_lsh_verified_pairs(
+        df,
+        text_col,
+        id_col,
+        threshold,
+        num_hashes,
+        bands,
+        shingle_n,
+        bucket_cap,
+        shingle_mode=shingle_mode,
+    )
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    if materialize:
-        # the anti-join's other side below may be a many-branch Union; a
-        # checkpointed dupes frame is referenced per branch at zero replay
-        # cost, and AQE re-sizes it at runtime for the broadcast decision
-        dupes = dupes.localCheckpoint(eager=True)
+    # the anti-join's other side may be a many-branch Union: Catalyst would
+    # replan the whole LSH pipeline per branch without the barrier
+    dupes = dupes.localCheckpoint(eager=True)
     return df.join(dupes, id_col, "left_anti")
 
 
@@ -641,7 +619,6 @@ def minhash_lsh_verified_pairs(
     bands: int | None = 8,
     shingle_n: int = 3,
     bucket_cap: int = 1000,
-    materialize: bool = True,
     shingle_mode: str = "word",
 ) -> DataFrame:
     """Exact-Jaccard-verified near-dup pairs (id_a < id_b) with ONE tokenize
@@ -655,16 +632,6 @@ def minhash_lsh_verified_pairs(
     verification then checks char-shingle Jaccard, the measure the char
     MinHash approximates.
 
-    ``materialize=True`` (default) makes the single pass PHYSICAL: the
-    shingle-set frame is eagerly localCheckpointed (executor block store,
-    memory-then-disk), so the signature branch and both verify sides scan one
-    cached RDD. Sharing the frame by lineage alone does NOT do this — the
-    round-2 plan audit showed the scan→explode→window→collect_set subtree
-    replanned 6× with no ReusedExchange, because each consumer re-derives the
-    lineage through different downstream operators. Pass ``materialize=False``
-    to keep the operator fully lazy (e.g. when staging the sets frame through
-    a table yourself, as incremental_lsh_dedup does for signatures).
-
     Feed the result to the greedy min-id drop (minhash_lsh_dedup) or to
     dedup_by_components for the exact closure."""
     bands = _resolve_bands(threshold, num_hashes, bands)
@@ -672,21 +639,11 @@ def minhash_lsh_verified_pairs(
         sets = char_shingle_sets(df, text_col, id_col, shingle_n)
     else:
         sets = shingle_sets(df, text_col, id_col, shingle_n)
-    if materialize:
-        # LAZY sets + EAGER banded (r14): the eager sets barrier was one of
-        # two sequential driver-blocking jobs per dedup run. The banded
-        # frame's checkpoint job now materializes sets inside itself —
-        # sets' first consumer is banded's narrow derive, so the cache
-        # populates race-free before the verify branches (which read sets
-        # through the SAME truncated-lineage blocks) ever touch it. An
-        # all-lazy variant was measured SLOWER on the incremental twin
-        # (within one job the verify-side stages raced the banded stage on
-        # the uncached sets partitions and recomputed the tokenize
-        # concurrently); this shape keeps one barrier and zero recompute.
-        sets = sets.localCheckpoint(eager=False)
+    # three consumers (banding + both verify sides) read one tokenize pass:
+    # lazy sets fill inside banded's eager job, before verify touches them
+    sets = sets.localCheckpoint(eager=False)
     banded = _banded_from_sets(sets, id_col, num_hashes, bands)
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
+    banded = banded.localCheckpoint(eager=True)
     cands = _expand_buckets(banded, id_col, bucket_cap)
     return verify_pairs_jaccard(
         df, cands, text_col, id_col, threshold, shingle_n=shingle_n, sets=sets
@@ -728,7 +685,6 @@ def incremental_lsh_dedup(
     run_log=None,
     run_log_source: str = "lsh_dedup",
     keep_dropped_signatures: bool = False,
-    materialize: bool = True,
     master_banded_grouped: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a new batch against BOTH itself and an already-deduped corpus
@@ -781,16 +737,11 @@ def incremental_lsh_dedup(
     computed in an earlier run collide correctly with rows computed today —
     nothing needs re-hashing as the store grows.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the BATCH-scale
-    intermediates (shingle sets, banded rows, dupe ids) — each has multiple
-    downstream consumers, and lineage-only sharing re-plans the whole batch
-    tokenize per consumer (a plan audit of the two-batch query showed the
-    documents scan replicated 62×). All three frames are batch-sized by the
-    operator's own premise, and a production pipeline writes the banded
-    frame to the store table anyway. Pass False when staging every
-    intermediate through tables yourself. ``bands=None`` → lsh_plan-derived
-    banding (see minhash_lsh_dedup); an incremental store's banding must of
-    course stay FIXED across runs — derive once, persist the config."""
+    The batch-scale intermediates (shingle sets, banded rows, dupe ids) are
+    checkpointed: each has several consumers, and all are batch-sized by
+    the operator's own premise. ``bands=None`` → lsh_plan-derived banding
+    (see minhash_lsh_dedup); an incremental store's banding must of course
+    stay FIXED across runs — derive once, persist the config."""
     bands = _resolve_bands(threshold, num_hashes, bands)
     if batch_min_id is None and run_log is not None:
         stored = run_log.last_successful_run(run_log_source)
@@ -804,23 +755,11 @@ def incremental_lsh_dedup(
             "pass exactly one of master_banded / master_banded_grouped"
         )
     sets_b = shingle_sets(batch, text_col, id_col, shingle_n)
-    if materialize:
-        # LAZY sets + EAGER banded (r14): the eager sets_b barrier was one
-        # of ~7 sequential driver-blocking jobs per composite run
-        # (profile_construct measured the barriers at ~60% of
-        # q_incremental_dedup_grouped's per-iteration wall, with the noop
-        # save at 0.3 s). Lazy marking persists + truncates the same
-        # lineage, and banded_b's eager job materializes sets_b inside
-        # itself — sets_b's first consumer is banded_b's narrow derive, so
-        # the cache populates race-free before the verify branches read
-        # it. An ALL-lazy variant (banded_b lazy too) was measured SLOWER:
-        # inside the dupes job the verify-side stages raced the banding
-        # stage on the uncached sets partitions and recomputed the batch
-        # tokenize concurrently.
-        sets_b = sets_b.localCheckpoint(eager=False)
+    # lazy sets_b fill inside banded_b's eager job, before the verify
+    # branches read them (same shape as minhash_lsh_verified_pairs)
+    sets_b = sets_b.localCheckpoint(eager=False)
     banded_b = _banded_from_sets(sets_b, id_col, num_hashes, bands)
-    if materialize:
-        banded_b = banded_b.localCheckpoint(eager=True)
+    banded_b = banded_b.localCheckpoint(eager=True)
     if master_banded_grouped is not None:
         gb = banded_b.groupBy("band_idx", "band_hash").agg(
             F.collect_list(F.col(id_col)).alias("__bids")
@@ -872,8 +811,8 @@ def incremental_lsh_dedup(
         sets=sets, width=vw,
     )
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    if materialize:
-        dupes = dupes.localCheckpoint(eager=True)
+    # two consumers: the survivors and the survivor_banded anti-joins
+    dupes = dupes.localCheckpoint(eager=True)
     survivors = batch.join(dupes, id_col, "left_anti")
     if keep_dropped_signatures:
         return survivors, banded_b
@@ -887,7 +826,6 @@ def verify_pairs_jaccard(
     text_col: str,
     id_col: str,
     threshold: float,
-    flavor: str = "shingle",
     shingle_n: int = 3,
     sets: DataFrame | None = None,
     width: int | None = None,
@@ -898,9 +836,9 @@ def verify_pairs_jaccard(
     list; the per-pair work is one native array_intersect over fixed-width
     longs, with |union| recovered arithmetically as |a|+|b|-|intersect|.
 
-    Same values as computing jaccard_shingles/jaccard_words per pair from
-    raw text, but ~5× faster on the candidate stream: the per-pair HOF form
-    re-tokenizes both texts with interpreted lambda expressions for every
+    Same values as computing jaccard_shingles per pair from raw text, but
+    ~5× faster on the candidate stream: the per-pair HOF form re-tokenizes
+    both texts with interpreted lambda expressions for every
     pair, while here tokenization cost is per-DOC and the per-pair step
     stays in codegen. Returns (id_a, id_b) pairs meeting the threshold.
 
@@ -911,32 +849,25 @@ def verify_pairs_jaccard(
     No empty-set guard is needed on the division: only docs with ≥1 token
     enter LSH buckets, so union ≥ 1 for every candidate pair."""
     if sets is None:
-        if flavor == "shingle":
-            sets = shingle_sets(df, text_col, id_col, shingle_n)
-        else:
-            sets = (
-                df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("shingle"))
-                .groupBy(id_col)
-                .agg(F.collect_set(F.xxhash64(F.col("shingle"))).alias("__set"))
-            )
+        sets = shingle_sets(df, text_col, id_col, shingle_n)
     # |union| = |a| + |b| - |intersect|: one hash-set probe per pair instead
     # of two (array_union built and measured at ~the same cost as the
     # intersect it duplicates)
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = F.size("__sa") + F.size("__sb") - F.size(F.array_intersect("__sa", "__sb"))
-    # Join widths PINNED (r14): the pair list and the set frame are both
-    # tiny in BYTES (8-byte ids; arrays of longs) but the per-pair
-    # array_intersect is the whole verify cost, and AQE's byte-based
-    # coalescing ran the probe side on ONE task (measured 1.9 s of the
-    # q_char_lsh_dedup iteration; 0.77 s pinned). Explicit
-    # repartition(width, key) on each join side replaces the join's own
-    # AQE-sized exchange (same-key pre-partitioning satisfies the join's
-    # distribution requirement), so no exchange is added — only its width
-    # is pinned compute-proportionally. Join STRATEGY stays the planner's:
+    # Probe width PINNED: the pair list and the set frame are both tiny in
+    # BYTES (8-byte ids; arrays of longs) but the per-pair array_intersect
+    # is the whole verify cost, and AQE's byte-based coalescing ran the
+    # probe side on ONE task (measured 1.9 s of the q_char_lsh_dedup
+    # iteration; 0.77 s pinned). Only the pair list's id_a side is pinned,
+    # by an explicit repartition(width, "id_a") that replaces the first
+    # join's own AQE-sized exchange (same-key pre-partitioning satisfies
+    # its distribution requirement), so no exchange is added. The id_b
+    # join keeps the planner's exchange. Join STRATEGY stays the planner's:
     # locally it broadcasts the small side; at corpus scale the row-scaled
-    # estimates flip both joins to SMJ over these same pinned exchanges.
-    # A forced broadcast(pairs) variant measured slower AND caps at the
-    # 8 GB broadcast limit, so the hint is deliberately absent.
+    # estimates flip the joins to SMJ. A forced broadcast(pairs) variant
+    # measured slower AND caps at the 8 GB broadcast limit, so the hint is
+    # deliberately absent.
     spark_dp = pairs.sparkSession.sparkContext.defaultParallelism
     from data_rivers_spark.session import plan_partitions
 
@@ -1137,44 +1068,12 @@ def simhash_column(df: DataFrame, text_col: str, out_col: str = "simhash") -> Da
     return fan_out(df).withColumn(out_col, _simhash_udf()(F.col(text_col)))
 
 
-def _auto_clean_blocks(n: int, max_hamming: int) -> int:
-    """OPT-IN count-based depth rule for Manku combination blocking: one
-    extra clean block per 4x corpus growth past ~2M signatures, clamped to
-    what packs into a 63-bit combo key. Each +1 block multiplies the combo
-    keyspace by ~2^5-2^9 (one octave of n² ACCIDENTAL-collision growth)
-    while blocking rows grow only C(t, clean)-fold.
-
-    NOT the default, by measurement: the r10 1024x octave showed deepening
-    LOSING 3x at 5.12M text signatures (45.5 s → 133 s) because the heavy
-    candidate stream there was TRUE pairs (a fixture artifact), which no
-    key widening removes — the extra blocking rows were pure cost. This
-    rule is correct only in the uniform-model regime where accidental
-    collisions (≈ combos·n²/2^keybits) dominate true pairs; output is
-    invariant either way (pigeonhole recall + exact bit_count verify), so
-    measure the candidate stream before opting in."""
-    import math
-
-    ecb = 3
-    if n > 2_000_000:
-        ecb = 3 + math.ceil(math.log(n / 2_000_000, 4))
-    # respect the 63-bit combo-key packing constraint
-    while ecb > 3:
-        t = max_hamming + ecb
-        slot = 64 // t + (1 if 64 % t else 0)
-        if ecb * slot <= 63:
-            break
-        ecb -= 1
-    return min(ecb, 6)
-
-
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
     sim_col: str = "simhash",
     max_hamming: int = 3,
-    materialize: bool = True,
-    extra_clean_blocks: int | None = 3,
-    corpus_count: int | None = None,
+    extra_clean_blocks: int = 3,
 ) -> DataFrame:
     """Pairs within hamming distance ≤ max_hamming, combination-blocked
     (Manku et al., WWW'07 §3): the 64-bit signature splits into
@@ -1198,62 +1097,38 @@ def simhash_near_pairs(
     MEASURED at 1.28M docs the 3-block default still wins (17s vs 30s):
     its ~3.8M accidental candidates die in a cheap native bit_count
     filter, while the 4th block pays real shuffle volume on every row —
-    and REMEASURED at 5.12M text signatures the default still wins
-    (45.5 s vs 133 s): the r10 burn-down first misread a media-fixture
-    pair explosion as accidental-candidate growth, auto-deepened on
-    corpus size, and the same octave that motivated the change refuted it
-    (the candidate stream there was TRUE pairs, which no key widening
-    removes, so the 4th block's ~75% extra blocking rows were pure cost).
+    and at 5.12M text signatures the default still wins (45.5 s vs
+    133 s): the candidate stream there was TRUE pairs, which no key
+    widening removes, so the 4th block's ~75% extra blocking rows were
+    pure cost.
     Keep 3 unless ACCIDENTAL collisions dominate — the uniform-model
     regime (≈ combos·N²/2^keybits rivaling ~10·N) at N in the tens of
-    millions of genuinely high-entropy signatures; opt in explicitly via
-    ``extra_clean_blocks`` or ``extra_clean_blocks=None`` + corpus size
-    (``_auto_clean_blocks``'s count-based rule, with that caveat). Exact
-    recall is unaffected at ANY clean count ≥ 1 (the pigeonhole guarantee
-    + true bit_count verify make the OUTPUT invariant to this knob — it
-    is purely a cost decision, so measure before deepening).
+    millions of genuinely high-entropy signatures. Exact recall is
+    unaffected at ANY clean count ≥ 1 (the pigeonhole guarantee + true
+    bit_count verify make the OUTPUT invariant to this knob — it is
+    purely a cost decision, so measure before deepening).
 
-    ``materialize=True`` eagerly localCheckpoints the (id, signature)
-    projection first. The signature column is usually the Arrow pandas UDF
-    from ``simhash_column``, and WITHOUT materialization the self-join
-    re-evaluates that UDF on both aliases AFTER the 20-way key explode —
-    ~40 signature computations per doc instead of 1 (measured 6×
-    end-to-end at 320k docs). Pass False only when the input is already a
-    materialized signature table."""
+    Parameters are validated before any job runs; the (id, signature)
+    projection is then eagerly checkpointed."""
     from itertools import combinations
 
     if max_hamming < 1:
         raise ValueError("max_hamming=0 is exact equality — groupBy the signature")
-    if extra_clean_blocks is not None and extra_clean_blocks < 1:
+    if extra_clean_blocks < 1:
         raise ValueError("need at least one guaranteed-clean block")
-    if materialize:
-        df = df.select(id_col, sim_col).localCheckpoint(eager=True)
-    if extra_clean_blocks is None:
-        n = df.count() if corpus_count is None else int(corpus_count)
-        extra_clean_blocks = _auto_clean_blocks(n, max_hamming)
     t_blocks = max_hamming + extra_clean_blocks
     widths = [64 // t_blocks + (1 if i < 64 % t_blocks else 0) for i in range(t_blocks)]
     offsets = [sum(widths[:i]) for i in range(t_blocks)]
-
-    def block(i):
-        # arithmetic shift + mask extracts bits [offset, offset+width) of
-        # the signed 64-bit signature exactly (mask kills sign extension)
-        return F.shiftright(F.col(sim_col), offsets[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-
-    # pack each clean-block combo into one long via fixed-width bit slots
-    # (validated below to fit 63 bits, so the packing is injective per
-    # combo_idx; chunk_idx disambiguates across combos)
+    # pack each clean-block combo into one long via fixed-width bit slots;
+    # the packing is injective per combo_idx only while every slot fits in
+    # the 63 value bits of a signed long (chunk_idx disambiguates across
+    # combos). n_pick * slot can exceed that (e.g. max_hamming=1,
+    # extra_clean_blocks=11 → slot=6, 11*6=66 — silent long wrap aliasing
+    # distinct combos), and extra_clean_blocks >= 22 would even build
+    # F.lit(1 << 63), which overflows LongType at plan time. Every useful
+    # operating point (the default, and the measured 4-clean alternative)
+    # packs well inside 63 bits.
     n_pick = extra_clean_blocks
-    # fixed-width slot packing is injective only while every slot fits in
-    # the 63 value bits of a signed long: n_pick * slot can exceed that
-    # (e.g. max_hamming=1, extra_clean_blocks=11 → slot=6, 11*6=66 — silent
-    # long wrap aliasing distinct combos), and extra_clean_blocks >= 22
-    # would even build F.lit(1 << 63) which overflows LongType at plan
-    # time. Reject such configs up front — every useful operating point
-    # (defaults, and the measured 4-clean alternative) packs well inside
-    # 63 bits.
     slot = max(widths)
     if n_pick * slot > 63:
         raise ValueError(
@@ -1262,6 +1137,18 @@ def simhash_near_pairs(
             " raise max_hamming) so extra_clean_blocks *"
             " ceil(64/(max_hamming+extra_clean_blocks)) <= 63"
         )
+    # the signature column is usually simhash_column's Arrow UDF: without
+    # the barrier the self-join re-evaluates it on both aliases after the
+    # combo explode (~40 signature computations per doc instead of 1)
+    df = df.select(id_col, sim_col).localCheckpoint(eager=True)
+
+    def block(i):
+        # arithmetic shift + mask extracts bits [offset, offset+width) of
+        # the signed 64-bit signature exactly (mask kills sign extension)
+        return F.shiftright(F.col(sim_col), offsets[i]).bitwiseAND(
+            F.lit((1 << widths[i]) - 1)
+        )
+
     keys = F.array(
         *[
             sum(

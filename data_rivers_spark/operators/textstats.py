@@ -314,7 +314,6 @@ def sequential_pack_scalable(
     budget: int,
     group_col: str | None = None,
     num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe twin of ``sequential_pack``: identical chunk_idx output
     without the one-sort-task-per-group window (a per-group cumsum window
@@ -332,22 +331,10 @@ def sequential_pack_scalable(
     chunk_idx = floor(start / budget). Two full-width shuffles (range +
     pid·group hash) and one broadcast replace the per-group serialization.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the locally
-    cumsum'd frame so the totals branch and the output branch read ONE
-    computed RDD — offset correctness REQUIRES both branches to see the
-    same partition assignment, and Catalyst compiles them as two separate
-    range exchanges otherwise (the global_row_number_scalable plan-audit
-    finding; same reasoning, same default). ``materialize=False`` persists
-    (MEMORY_AND_DISK) instead of checkpointing: both branches still read
-    one computed partition assignment without the eager round-trip, at the
-    (documented) risk that a cache eviction forces a recompute mid-job —
-    never a silent full-recompute of two independent range exchanges
-    (r12 advice).
-
     NULL groups pack like any other group (the window form's partitionBy
     semantics): the offsets join is built with eqNullSafe on the group key,
     because a plain inner equi-join would silently DROP every NULL-group
-    row — NULL never equals NULL (r12 advice, high)."""
+    row — NULL never equals NULL."""
     from pyspark.sql import Window
 
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -361,10 +348,10 @@ def sequential_pack_scalable(
         "__lstart",
         F.sum(F.col(token_count_col)).over(local_w) - F.col(token_count_col),
     )
-    if materialize:
-        numbered = numbered.localCheckpoint(eager=True)
-    else:
-        numbered = numbered.persist()
+    # offsets are correct only if the totals branch and the output branch
+    # see ONE partition assignment; without the barrier Catalyst compiles
+    # them as two separate range exchanges
+    numbered = numbered.localCheckpoint(eager=True)
     tot_keys = ([group_col] if group_col else []) + ["__pid"]
     totals = numbered.groupBy(*tot_keys).agg(
         F.sum(F.col(token_count_col)).alias("__tot")
@@ -946,7 +933,6 @@ def unigram_logprob_score(
     text_col: str,
     id_col: str,
     ndigits: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram LM — the CCNet-style fluency signal (CCNet scores with a
@@ -960,18 +946,12 @@ def unigram_logprob_score(
     Scale: one token-keyed aggregate for the LM, one join of the exploded
     corpus back to it (both sides shuffle on the token hash), one doc-keyed
     mean. The total-token scalar folds in as a window-free cross join of a
-    1-row aggregate, not a driver round-trip.
-
-    ``materialize=True`` (default) eagerly localCheckpoints the LM frame —
-    it is vocab-sized (small at any corpus size), and without it Catalyst
-    re-plans the full tokenize+aggregate subtree for BOTH consumers (the
-    scoring join and the total), tokenizing the corpus three times instead
-    of twice (plan-audited; DataFrame reuse is lineage reuse, not
-    computation reuse — same lesson as the LSH shingle frame)."""
+    1-row aggregate, not a driver round-trip."""
     ex = df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("token"))
     lm = ex.groupBy("token").agg(F.count(F.lit(1)).alias("__cnt"))
-    if materialize:
-        lm = lm.localCheckpoint(eager=True)
+    # vocab-sized LM, two consumers (scoring join + total): Catalyst
+    # replans the tokenize+aggregate per consumer without the barrier
+    lm = lm.localCheckpoint(eager=True)
     total = lm.agg(F.sum("__cnt").alias("__total"))
     scored = (
         ex.join(lm, "token")

@@ -2319,9 +2319,9 @@ def q_curation_select_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = pdocs.join(langs, "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("lang"), F.lit("und")).alias("lang"), "text"
     )
-    # stage-boundary materialization: three downstream consumers (pool
-    # featurize x2 under materialize=False, final weight join) — same
-    # posture as the prefix's `kept` checkpoint
+    # stage-boundary materialization: three downstream consumers (the pool
+    # featurize runs twice by design, see dsir_importance_weights; final
+    # weight join) — same posture as the prefix's `kept` checkpoint
     corpus = corpus.localCheckpoint(eager=True)
     weighted = IMP.dsir_importance_weights(
         corpus, "text", "doc_id", None, target_flag=F.col("lang") == "en",

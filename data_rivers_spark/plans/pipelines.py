@@ -302,9 +302,9 @@ def corpus_curation_pipeline(
                 "them or drop select_k"
             )
 
-        # stage boundary: the DSIR featurize has three consumers of the
-        # cleaned corpus (pool featurize x2 under the measured
-        # materialize=False default, final weight join)
+        # stage boundary: three consumers of the cleaned corpus (the pool
+        # featurize runs twice by design, see dsir_importance_weights; final
+        # weight join)
         deduped = deduped.localCheckpoint(eager=True)
         target = dsir_target(deduped) if callable(dsir_target) else dsir_target
         weighted = IMP.dsir_importance_weights(

@@ -47,6 +47,7 @@ eager localCheckpoint by definition (a declarative stage boundary), and
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,12 +68,19 @@ from data_rivers_spark.operators import transforms as T
 from data_rivers_spark.session import load_tables
 
 
+def _keywords(fn: Callable) -> frozenset[str]:
+    """The keyword names a step may pass to ``fn``: every parameter after
+    the input frame."""
+    return frozenset(list(inspect.signature(fn).parameters)[1:])
+
+
 def _simple(fn: Callable) -> Callable:
     """Adapter for ops whose signature is (df, **params)."""
 
     def run(df: DataFrame, params: dict) -> DataFrame:
         return fn(df, **params)
 
+    run.keywords = _keywords(fn)
     return run
 
 
@@ -88,6 +96,7 @@ def _two(fn: Callable, right_param: str) -> Callable:
         rest = {k: v for k, v in params.items() if k != right_param}
         return fn(df, right, **rest)
 
+    run.keywords = _keywords(fn)
     return run
 
 
@@ -417,8 +426,9 @@ def run_spec(
 
     ``source_df`` overrides the spec's source (tests, or chaining specs);
     ``extra_ops`` lets a deployment register custom steps without forking
-    the interpreter. Unknown ops fail fast with the full valid-name list —
-    a config typo should die at plan-build time, not mid-run."""
+    the interpreter. Unknown ops fail fast with the full valid-name list,
+    and so do parameters an operator does not take — a config typo should
+    die at plan-build time, not mid-run."""
     ops = {**OPS, **(extra_ops or {})}
 
     def resolve_source(src: dict) -> DataFrame:
@@ -444,15 +454,18 @@ def run_spec(
     for i, step in enumerate(spec.get("steps", [])):
         op = step.get("op")
         params = {k: v for k, v in step.items() if k != "op"}
-        if op in CTX_OPS and op not in ops:
-            df = CTX_OPS[op](df, params, subframe)
-        elif op in ops:
-            df = ops[op](df, params)
-        else:
+        ctx = op in CTX_OPS and op not in ops
+        run = CTX_OPS[op] if ctx else ops.get(op)
+        if run is None:
             raise ValueError(
                 f"step {i}: unknown op {op!r}; valid ops: "
                 f"{sorted(set(ops) | set(CTX_OPS))}"
             )
+        keywords = getattr(run, "keywords", None)
+        unknown = sorted(set(params) - keywords) if keywords is not None else []
+        if unknown:
+            raise ValueError(f"step {i}: {op} got unknown parameter(s) {unknown}")
+        df = run(df, params, subframe) if ctx else run(df, params)
     if "select" in spec:
         df = df.select(*spec["select"])
     return df

@@ -91,17 +91,13 @@ def test_simhash_blocking_rejects_overflowing_combo_keys(spark):
     sigs = spark.createDataFrame([(1, 7), (2, 5)], "doc_id long, simhash long")
     # max_hamming=1, extra_clean_blocks=11 -> slot=6, 11*6=66 bits > 63
     with pytest.raises(ValueError, match="63"):
-        D.simhash_near_pairs(
-            sigs, "doc_id", max_hamming=1, extra_clean_blocks=11, materialize=False
-        )
+        D.simhash_near_pairs(sigs, "doc_id", max_hamming=1, extra_clean_blocks=11)
     # extra_clean_blocks=22 would overflow LongType at plan build; same guard
     with pytest.raises(ValueError, match="63"):
-        D.simhash_near_pairs(
-            sigs, "doc_id", max_hamming=1, extra_clean_blocks=22, materialize=False
-        )
+        D.simhash_near_pairs(sigs, "doc_id", max_hamming=1, extra_clean_blocks=22)
     # the measured 4-clean operating point stays legal (t=7, slot=10, 40 bits)
     D.simhash_near_pairs(
-        sigs, "doc_id", max_hamming=3, extra_clean_blocks=4, materialize=False
+        sigs, "doc_id", max_hamming=3, extra_clean_blocks=4
     ).collect()
 
 
@@ -330,29 +326,14 @@ def test_ivf_topk_recall(spark, sf_dir):
     assert recall > 0.3, recall
 
 
-def test_auto_clean_blocks_rule():
-    # measured calibration: 3 wins through ~2M signatures, +1 per 4x beyond
-    assert D._auto_clean_blocks(100_000, 3) == 3
-    assert D._auto_clean_blocks(1_280_000, 3) == 3
-    assert D._auto_clean_blocks(5_120_000, 3) == 4
-    assert D._auto_clean_blocks(20_500_000, 3) == 5
-    assert D._auto_clean_blocks(82_000_000, 3) == 6
-    assert D._auto_clean_blocks(10**12, 3) == 6  # clamp
-    # packing constraint respected for small max_hamming (wide slots)
-    ecb = D._auto_clean_blocks(10**9, 1)
-    slot = 64 // (1 + ecb) + (1 if 64 % (1 + ecb) else 0)
-    assert ecb * slot <= 63
-
-
 def test_simhash_pairs_invariant_to_clean_blocks(spark):
     """extra_clean_blocks is a pure cost knob: pigeonhole recall + exact
-    bit_count verify make the pair set identical at any setting (and under
-    the auto default)."""
+    bit_count verify make the pair set identical at any setting."""
     rows = [(i, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(200)]
     rows += [(1000 + i, rows[i][1] ^ (1 << (i % 60))) for i in range(50)]  # planted
     df = spark.createDataFrame(rows, "doc_id long, simhash long")
     outs = []
-    for ecb in (3, 4, None):
+    for ecb in (3, 4):
         got = {
             (r.id_a, r.id_b, r.hamming)
             for r in D.simhash_near_pairs(
@@ -360,17 +341,7 @@ def test_simhash_pairs_invariant_to_clean_blocks(spark):
             ).collect()
         }
         outs.append(got)
-    assert outs[0] == outs[1] == outs[2] and len(outs[0]) >= 50
-    # corpus_count hint reproduces the opt-in auto result without the
-    # count action (auto is opt-in via extra_clean_blocks=None since the
-    # r10 measurement showed deepening loses on true-pair-dominated streams)
-    hinted = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in D.simhash_near_pairs(
-            df, "doc_id", max_hamming=3, extra_clean_blocks=None, corpus_count=250
-        ).collect()
-    }
-    assert hinted == outs[0]
+    assert outs[0] == outs[1] and len(outs[0]) >= 50
 
 
 def test_ngram_jaccard_pairs_salt_invariance(spark):

@@ -162,24 +162,18 @@ def test_sequential_pack_scalable_equals_window_form(spark):
         ).collect()
     }
     assert set(got) == {1, 2, 3, 4, 5} and got == want
-
-
-def test_sequential_pack_scalable_materialize_false(spark):
-    # r13 (closing the r12 low advice): materialize=False now persists the
-    # locally-cumsum'd frame instead of recomputing two independent range
-    # exchanges, so it is safe (one partition assignment) — output must
-    # equal the exact window form, NULL groups included.
-    rows = [
-        (i, ["a", "b", None][i % 3], 1 + i % 7) for i in range(300)
-    ]
+    # NULL groups spread over more input splits than range partitions
+    rows = [(i, ["a", "b", None][i % 3], 1 + i % 7) for i in range(300)]
     df = spark.createDataFrame(rows, "k long, g string, tok int").repartition(11)
     want = {
         r.k: r.chunk_idx for r in TX.sequential_pack(df, "tok", "k", 16, "g").collect()
     }
-    got_df = TX.sequential_pack_scalable(
-        df, "tok", "k", 16, "g", num_partitions=5, materialize=False
-    )
-    got = {r.k: r.chunk_idx for r in got_df.collect()}
+    got = {
+        r.k: r.chunk_idx
+        for r in TX.sequential_pack_scalable(
+            df, "tok", "k", 16, "g", num_partitions=5
+        ).collect()
+    }
     assert got == want
 
 

@@ -74,6 +74,18 @@ def test_spec_unknown_op_fails_fast_with_catalog(spark):
         assert "dedup_latest" in str(e)
 
 
+def test_spec_unknown_param_fails_fast(spark):
+    # a keyword the operator does not take dies at the spec edge, not as a
+    # raw TypeError inside the operator (and before any job runs)
+    df = spark.createDataFrame([(1, 5)], "doc_id long, simhash long")
+    step = {"op": "simhash_near_pairs", "id_col": "doc_id", "materialize": False}
+    with pytest.raises(
+        ValueError,
+        match=r"step 0: simhash_near_pairs got unknown parameter\(s\) \['materialize'\]",
+    ):
+        run_spec(spark, {"steps": [step]}, source_df=df)
+
+
 def test_spec_extra_ops_extension_point(spark):
     df = spark.createDataFrame([(1,), (2,)], "id long")
     out = run_spec(

@@ -105,7 +105,7 @@ EXPLAINED = {
     "q_nfc_normalize": "planted-NFD union fixture",
     "q_perplexity_buckets": "LM build + scoring pass + language join-back (documented 2-tokenize, same as q_unigram_logprob)",
     # round-11 review of the round-10 additions (the r10 verdict's seven):
-    "q_dsir_weights": "pool featurize x2 (measured materialize=False default: recompute beat the eager-checkpoint round-trip, envelope mins 10.458 vs 13.822 s — bench_out/rebench_dsir_materialize_r11.json) + target featurize + final weight join-back; the r10 x3-target tt/ts re-aggregation defect is fixed (window totals, dsir_log_ratios)",
+    "q_dsir_weights": "pool featurize x2 (runs twice by design; see dsir_importance_weights) + target featurize + final weight join-back (target totals via window, dsir_log_ratios)",
     "q_dsir_resample": "same 4-scan shape as q_dsir_weights (resample is TakeOrderedAndProject on top, adds no scan)",
     "q_spec_curation": "perplexity_buckets dispatched through run_spec: identical 3-scan shape to q_perplexity_buckets (documented 2-tokenize + language join-back)",
     "q_cluster_safe_split": "planted-copy union fixture (docs + prefix-clipped twins from one table)",

@@ -1115,8 +1115,8 @@ CELL_NOTES: dict[str, str] = {
         "fixture's per-word suffix char growth (same bound discussion as "
         "curation_pipeline). The delta over the curation_pipeline row "
         "(159 -> 350 s at 256x) prices the selection tail itself: the DSIR "
-        "featurize runs twice over the cleaned corpus by MEASURED choice "
-        "(materialize=False, bench_out/rebench_dsir_materialize_r11.json) "
+        "featurize runs twice over the cleaned corpus by design (see "
+        "dsir_importance_weights; bench_out/rebench_dsir_materialize_r11.json) "
         "plus one target pass — all three are the same explode+agg whose "
         "per-octave ratio the q_dsir rows already pin; selection and mix "
         "are k-row-sized past the one TakeOrderedAndProject. r12: the "
@@ -1181,7 +1181,7 @@ CELL_NOTES: dict[str, str] = {
         "phash-fullentropy-decode-r10; sampled pairs: min hamming 14, "
         "mean 31.5) — the property real images have: distinct contents "
         "separate, exact byte twins still collide. Post-fix stage "
-        "decomposition (tools/decompose_media.py, one JVM per scale): "
+        "decomposition (one JVM per scale): "
         "pairs are exactly the planted twins at BOTH scales (12,800 @ "
         "256x -> 51,200 @ 1024x — OUTPUT now linear by construction), "
         "t_phash 18.78 -> 55.38 s (ratio 2.95; the full-entropy stub "
@@ -1262,8 +1262,8 @@ CELL_NOTES: dict[str, str] = {
         "at 5.12M signatures) measured 132.98/147.34 s vs fixed-3's "
         "45.53 s — the 4th block's ~75% extra blocking rows are pure cost "
         "when the candidate stream is true pairs rather than accidental "
-        "collisions. The deeper rule remains available as an explicit "
-        "opt-in for the uniform-model regime (combos·n²/2^keybits ≳ 10n "
+        "collisions. A deeper integer extra_clean_blocks remains an explicit "
+        "choice for the uniform-model regime (combos·n²/2^keybits ≳ 10n "
         "of genuinely high-entropy signatures); output is invariant "
         "either way (pinned by test)."
     ),
