@@ -162,19 +162,22 @@ def test_sequential_pack_scalable_equals_window_form(spark):
         ).collect()
     }
     assert set(got) == {1, 2, 3, 4, 5} and got == want
-    # NULL groups spread over more input splits than range partitions
+
+
+def test_sequential_pack_scalable_materialize_false(spark):
+    # The name is kept from the removed materialize=False (persist) mode.
+    # Its input still checks the one remaining path: NULL groups spread over
+    # more input splits than range partitions must equal the window form,
+    # and the output must not change when the result is recomputed.
     rows = [(i, ["a", "b", None][i % 3], 1 + i % 7) for i in range(300)]
     df = spark.createDataFrame(rows, "k long, g string, tok int").repartition(11)
     want = {
         r.k: r.chunk_idx for r in TX.sequential_pack(df, "tok", "k", 16, "g").collect()
     }
-    got = {
-        r.k: r.chunk_idx
-        for r in TX.sequential_pack_scalable(
-            df, "tok", "k", 16, "g", num_partitions=5
-        ).collect()
-    }
+    got_df = TX.sequential_pack_scalable(df, "tok", "k", 16, "g", num_partitions=5)
+    got = {r.k: r.chunk_idx for r in got_df.collect()}
     assert got == want
+    assert {r.k: r.chunk_idx for r in got_df.collect()} == want
 
 
 def test_quantize_int8_roundtrip(spark):
